@@ -19,7 +19,7 @@ def main() -> None:
     tag = sys.argv[1]
     prefixes = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
     from adavnceseo_crawler_spark.queries import QUERIES
     from adavnceseo_crawler_spark.session import get_spark

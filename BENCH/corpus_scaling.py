@@ -11,8 +11,8 @@ Protocol mirrors BENCH/scaling.py (the crawl-loop harness):
   stage's own jobs, not lazy upstream work;
 * per-stage row counts are emitted and MUST be identical across levels
   (same deterministic input ⇒ same output — a cheap cross-level check);
-* interleave with BENCH/memprobe.py via r5_gated.py for quiet-window
-  adjudication on this bandwidth-contended host.
+* pair with BENCH/memprobe.py probes for quiet-window adjudication on a
+  bandwidth-contended host.
 
 Reproduce: python BENCH/corpus_scaling.py            (both levels)
            CORPUS_LEVELS=16 python BENCH/corpus_scaling.py   (one level)
@@ -120,7 +120,7 @@ import sys
 sys.path.insert(0, %(repo)r)
 from adavnceseo_crawler_spark.session import get_spark
 from adavnceseo_crawler_spark import synth
-spark = get_spark("gencorpus", master="local[32]", shuffle_partitions=64)
+spark = get_spark("gencorpus", master="local[*]")
 synth.gen_documents(spark, %(docs)d, partitions=256).write.mode(
     "overwrite").parquet(sys.argv[1])
 print("GEN_DONE")

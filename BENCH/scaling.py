@@ -90,7 +90,7 @@ import os, sys
 sys.path.insert(0, %(repo)r)
 from adavnceseo_crawler_spark.session import get_spark
 from adavnceseo_crawler_spark import synth
-spark = get_spark("genweb", master="local[32]", shuffle_partitions=64)
+spark = get_spark("genweb", master="local[*]")
 synth.gen_pages(spark, %(pages)d, %(hosts)d, partitions=256).write.mode(
     "overwrite").parquet(sys.argv[1])
 print("GENWEB_DONE")

@@ -24,9 +24,6 @@ CONTENT_PATTERNS = (
     ("listing", "category|archive|list|index"),
 )
 
-# reference stopword list (processor.py:85)
-STOPWORDS = ("the", "a", "an", "and", "or", "but", "in", "on", "at", "to")
-
 # tiny per-language marker sets for the n-gram/stopword language heuristic
 LANG_MARKERS = {
     "en": ("the", "and", "of", "to", "in", "is", "that", "it", "for", "with"),
@@ -136,32 +133,6 @@ def lang_id_col(text: Column) -> Column:
             )
         )
     return F.greatest(*cands)["n"]
-
-
-def text_quality_cols(text: Column) -> dict[str, Column]:
-    """Quality-signal ratios for training-data filtering."""
-    n_chars = F.length(text).cast("double")
-    # filter the [''] that Spark's split yields for empty text (str.split()
-    # semantics: 0 words), so the ratios below see n_words = 0 there
-    words = F.filter(
-        F.split(F.trim(text), "\\s+"), lambda w: w != F.lit("")
-    )
-    n_words = F.size(words).cast("double")
-    n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
-    n_punct = F.length(F.regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    n_stop = F.size(
-        F.filter(words, lambda w: F.lower(w).isin(*STOPWORDS))
-    ).cast("double")
-    safe = F.greatest(n_chars, F.lit(1.0))
-    safe_w = F.greatest(n_words, F.lit(1.0))
-    return {
-        "n_chars": n_chars.cast("long"),
-        "n_words": n_words.cast("long"),
-        "alpha_ratio": n_alpha / safe,
-        "punct_ratio": n_punct / safe,
-        "stopword_ratio": n_stop / safe_w,
-        "mean_word_len": n_chars / safe_w,
-    }
 
 
 # ---------------------------------------------------------------------------

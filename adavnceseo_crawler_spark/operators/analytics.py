@@ -1,4 +1,4 @@
-"""Crawl analytics views (A1-A3, A11) over the engine's own tables.
+"""Crawl analytics views (A1-A3) over the engine's own tables.
 
 The reference exposes these through ES aggregations
 (elasticsearch_storage.py:113-140), a Postgres GROUP BY
@@ -10,21 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def domain_stats_es(crawl_log: DataFrame) -> DataFrame:
-    """A1: per-domain avg content length / crawl time + status breakdown."""
-    return crawl_log.groupBy("host").agg(
-        F.round(F.avg("content_length"), 2).alias("avg_content_length"),
-        F.round(F.avg("crawl_time"), 4).alias("avg_crawl_time"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def status_breakdown(crawl_log: DataFrame) -> DataFrame:
-    return crawl_log.groupBy("host", "status_code").agg(
-        F.count(F.lit(1)).alias("n")
-    )
 
 
 def daily_histogram(crawl_log: DataFrame) -> DataFrame:
@@ -57,8 +42,3 @@ def top_domains(crawl_log: DataFrame, k: int = 10) -> DataFrame:
         .orderBy(F.desc("n"), F.asc("host"))
         .limit(k)
     )
-
-
-def total_pages(pages: DataFrame) -> int:
-    """A11: doc-count stats."""
-    return pages.count()

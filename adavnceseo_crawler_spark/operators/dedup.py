@@ -13,7 +13,6 @@ hash-aggregate.  Brute-force Jaccard is provided for oracle checks at small n.
 from __future__ import annotations
 
 import sys
-from hashlib import blake2b
 
 import numpy as np
 import pandas as pd
@@ -82,11 +81,6 @@ def jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 _MERSENNE = (1 << 61) - 1
-
-
-def _h64(s: str) -> int:
-    """Deterministic 64-bit string hash (executor-stable, unlike hash())."""
-    return int.from_bytes(blake2b(s.encode("utf-8"), digest_size=8).digest(), "little")
 
 
 def _hash_params(n_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:

@@ -27,6 +27,48 @@ from pyspark.sql import functions as F
 from .urlmine import url_template
 
 
+def _salted_topk(
+    df: DataFrame,
+    keys: list[str],
+    k: int,
+    salt_buckets: int,
+    order: list,
+    url: str = "url",
+    keep_rest: bool = False,
+) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
+    """The salted two-stage window top-``k`` per ``keys`` group (module
+    docstring): stage 1 ranks per (keys, salt), stage 2 exactly per keys
+    over the ≤ S×k survivors.  Returns (top, rest, caches), both halves
+    projected to ``df.columns``.
+
+    ``keep_rest=True`` also returns the complement ``rest = df \\ top`` as
+    ``_rn > k`` filters of the two rankings, which are then cached (each
+    has two consumers) and returned in ``caches`` for the caller to
+    unpersist.  ``keep_rest=False`` caches nothing — each ranking has a
+    single consumer — and returns ``rest=None, caches=[]``."""
+    cols = df.columns
+    ranked1 = None
+    if salt_buckets > 1:
+        salted = df.withColumn(
+            "_salt", F.pmod(F.xxhash64(F.col(url)), F.lit(salt_buckets))
+        )
+        w1 = Window.partitionBy(*keys, "_salt").orderBy(*order)
+        ranked1 = salted.withColumn("_rn1", F.row_number().over(w1))
+        if keep_rest:
+            ranked1 = ranked1.cache()
+        df = ranked1.filter(F.col("_rn1") <= k).drop("_rn1", "_salt")
+    w2 = Window.partitionBy(*keys).orderBy(*order)
+    ranked2 = df.withColumn("_rn2", F.row_number().over(w2))
+    if not keep_rest:
+        return ranked2.filter(F.col("_rn2") <= k).select(*cols), None, []
+    ranked2 = ranked2.cache()
+    top = ranked2.filter(F.col("_rn2") <= k).select(*cols)
+    rest = ranked2.filter(F.col("_rn2") > k).select(*cols)
+    if ranked1 is not None:
+        rest = ranked1.filter(F.col("_rn1") > k).select(*cols).unionByName(rest)
+    return top, rest, [c for c in (ranked1, ranked2) if c is not None]
+
+
 def per_host_topk(
     df: DataFrame,
     budget: int,
@@ -36,28 +78,67 @@ def per_host_topk(
     score: str = "score",
 ) -> DataFrame:
     order = [F.desc(score), F.asc(url)]
-    if salt_buckets > 1:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(url)), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy(host, "_salt").orderBy(*order)
-        df = (
-            salted.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= budget)
-            .drop("_rn1", "_salt")
-        )
-    w2 = Window.partitionBy(host).orderBy(*order)
-    return (
-        df.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= budget)
-        .drop("_rn2")
-    )
+    return _salted_topk(df, [host], budget, salt_buckets, order, url)[0]
 
 
 def _order_for(mode: str) -> list:
     if mode == "fifo":
         return [F.asc("seq"), F.asc("url")]
     return [F.desc("score"), F.asc("url")]
+
+
+def _eligible_set(
+    df: DataFrame,
+    budget: int,
+    salt_buckets: int,
+    order: list,
+    keep_rest: bool,
+    trap_threshold: int | None,
+    trap_cap: int,
+) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
+    """Trap cap (optional), then per-host top-``budget`` with BUDGET CAP
+    ELISION: a host whose row count is ≤ budget keeps all its rows, so only
+    rows of OVER-budget hosts go through the window sort.  On a Zipf
+    frontier the over-budget set is the short head (at the 4M-page scaling
+    shape: ~150 of 8000 hosts holding ~half the rows), so roughly half the
+    shuffle-sort work vanishes while the row set stays exactly the per-host
+    window top-k (for an under-budget host, top-k = identity).  The host
+    census is map-side combinable and one row per host; AQE turns the
+    anti/semi probes into broadcasts when it is small (no explicit hint —
+    at web scale the over-budget head may itself be too large to
+    broadcast, and AQE then keeps a shuffle join).  With the trap cap on,
+    the census is the rollup of its cell census, so the corpus aggregates
+    once.
+
+    Returns (eligible, rejected, caches): ``rejected = df \\ eligible``
+    (trap-dropped rows included) when ``keep_rest``, else None; ``caches``
+    are the ranked intermediates of both window top-ks."""
+    trap_dropped, caches = None, []
+    if trap_threshold is not None:
+        df, trap_dropped, counts, caches = trap_template_cap(
+            df, trap_threshold, trap_cap, order, salt_buckets,
+            want_dropped=keep_rest,
+        )
+        # counts are PRE-cap: a host the cap pushes back under budget still
+        # takes the window path, where top-k of ≤ budget rows is the
+        # identity — row set unaffected, no second census of the corpus.
+    else:
+        counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
+    over_hosts = counts.filter(F.col("_n") > budget).select("host")
+    under = df.join(over_hosts, "host", "left_anti")
+    over = df.join(over_hosts, "host", "left_semi")
+    top, rejected, rank_caches = _salted_topk(
+        over, ["host"], budget, salt_buckets, order, keep_rest=keep_rest
+    )
+    if rejected is not None:
+        # the semi-join moved ``host`` to the front; restore df's order
+        rejected = rejected.select(*df.columns)
+        if trap_dropped is not None:
+            # trap-capped rows are part of the complement: on compact rounds
+            # the frontier base is rewritten from (complement ∪ adds), and
+            # losing them would silently delete un-fetched URLs
+            rejected = trap_dropped.unionByName(rejected)
+    return under.unionByName(top), rejected, caches + rank_caches
 
 
 def schedule_batch(
@@ -80,17 +161,12 @@ def schedule_batch(
     LPOP special case (url_frontier.py:240-252, SURVEY.md S3).
 
     ``trap_threshold`` applies the crawler-trap template cap before the
-    politeness top-k (see trap_template_cap); its cell-census rollup feeds
-    the host counts so the corpus aggregates once."""
+    politeness top-k (see trap_template_cap)."""
     order = _order_for(mode)
-    counts = None
-    if trap_threshold is not None:
-        df, _, counts, _ = trap_template_cap(
-            df, trap_threshold, trap_cap, order, salt_buckets,
-            want_dropped=False,
-        )
-    per_host = per_host_topk_by(df, budget, salt_buckets, order, counts=counts)
-    return per_host.orderBy(*order).limit(batch_size)
+    eligible, _, _ = _eligible_set(
+        df, budget, salt_buckets, order, False, trap_threshold, trap_cap
+    )
+    return eligible.orderBy(*order).limit(batch_size)
 
 
 def trap_template_cap(
@@ -124,15 +200,13 @@ def trap_template_cap(
 
     Returns (kept, dropped, host_counts, caches): ``dropped`` rows stay in
     the frontier (re-considered next round — the politeness-deferral
-    semantics), ``host_counts`` is the (host, _n) rollup for
-    schedule_batch_counted to reuse.
+    semantics), ``host_counts`` is the (host, _n) rollup for the
+    politeness census to reuse.
 
     ``want_dropped=False`` (callers that never consume the complement —
     the lazy schedule_batch, and MoR rounds where un-dequeued rows simply
     stay in the frontier base): skips the drop branches AND the ranked-
-    intermediate caches entirely — each window ranking then has a single
-    consumer, so caching it would only pin frontier-sized frames in
-    executor memory for nothing.  Returns ``dropped=None, caches=[]``."""
+    intermediate caches entirely.  Returns ``dropped=None, caches=[]``."""
     with_t = df.withColumn("_tmpl", url_template(F.col("url")))
     cell_counts = with_t.groupBy("host", "_tmpl").agg(
         F.count(F.lit(1)).alias("_cn")
@@ -148,32 +222,13 @@ def trap_template_cap(
     trapped = with_t.join(
         F.broadcast(trap_cells), ["host", "_tmpl"], "left_semi"
     )
-    if salt_buckets > 1:
-        salted = trapped.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_tmpl", "_salt").orderBy(*order)
-        ranked1 = salted.withColumn("_rn1", F.row_number().over(w1))
-        if want_dropped:
-            ranked1 = ranked1.cache()
-            drop1 = ranked1.filter(F.col("_rn1") > cap).select(*cols)
-        else:
-            drop1 = None
-        stage2_in = ranked1.filter(F.col("_rn1") <= cap).drop("_rn1", "_salt")
-    else:
-        ranked1, drop1, stage2_in = None, None, trapped
-    w2 = Window.partitionBy("host", "_tmpl").orderBy(*order)
-    ranked2 = stage2_in.withColumn("_rn2", F.row_number().over(w2))
-    if want_dropped:
-        ranked2 = ranked2.cache()
-    admitted = ranked2.filter(F.col("_rn2") <= cap).select(*cols)
-    if not want_dropped:
-        return clean.unionByName(admitted), None, host_counts, []
-    drop2 = ranked2.filter(F.col("_rn2") > cap).select(*cols)
-    dropped = drop2 if drop1 is None else drop1.unionByName(drop2)
-    kept = clean.unionByName(admitted)
-    caches = [c for c in (ranked1, ranked2) if c is not None]
-    return kept, dropped, host_counts, caches
+    admitted, dropped, caches = _salted_topk(
+        trapped, ["host", "_tmpl"], cap, salt_buckets, order,
+        keep_rest=want_dropped,
+    )
+    if dropped is not None:
+        dropped = dropped.select(*cols)
+    return clean.unionByName(admitted.select(*cols)), dropped, host_counts, caches
 
 
 def schedule_batch_counted(
@@ -205,8 +260,9 @@ def schedule_batch_counted(
     ``df \\ scheduled`` in both branches (when the global cut binds, the
     eligible-minus-batch remainder is added via an anti-join against the
     small scheduled set), and ``caches`` are the frames for the caller to
-    unpersist at round end.  Row sets are identical to schedule_batch +
-    anti-join in both branches.
+    unpersist at round end, ending ``[..., eligible, scheduled]`` when the
+    cut binds.  Row sets are identical to schedule_batch + anti-join in
+    both branches.
 
     ``want_rejected=False`` (merge-on-read frontier rounds, plans/round.py:
     leftover rows simply stay un-tombstoned in the frontier base, so the
@@ -215,125 +271,21 @@ def schedule_batch_counted(
     memory — and returns ``rejected=None``.
 
     ``trap_threshold`` (CrawlConfig.trap_template_threshold) enables the
-    crawler-trap guard: per-(host, url-template) cells above the threshold
-    admit only ``trap_cap`` rows per round BEFORE the politeness top-k (see
-    trap_template_cap); the host census is then a rollup of the cell census,
-    so the guard adds no second corpus-wide aggregation."""
+    crawler-trap guard (see trap_template_cap and _eligible_set)."""
     order = _order_for(mode)
-    trap_dropped: DataFrame | None = None
-    trap_caches: list[DataFrame] = []
-    if trap_threshold is not None:
-        # the complement (and with it the trap-drop branches + their ranked
-        # caches) is only needed when the caller consumes ``rejected``
-        df, trap_dropped, counts, trap_caches = trap_template_cap(
-            df, trap_threshold, trap_cap, order, salt_buckets,
-            want_dropped=want_rejected,
-        )
-        # counts are PRE-cap: a host the cap pushes back under budget still
-        # takes the window path, where top-k of ≤ budget rows is the
-        # identity — row set unaffected, no second census of the corpus.
-    else:
-        counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    over_hosts = counts.filter(F.col("_n") > budget).select("host")
-    under = df.join(over_hosts, "host", "left_anti")
-    over = df.join(over_hosts, "host", "left_semi")
-    cols = df.columns
-
-    if not want_rejected:
-        eligible = under.unionByName(
-            _window_topk(over, budget, salt_buckets, order)
-        ).cache()
-        n_eligible = eligible.count()
-        if n_eligible <= batch_size:
-            return eligible, n_eligible, None, trap_caches + [eligible]
-        scheduled = eligible.orderBy(*order).limit(batch_size).cache()
-        scheduled.count()
-        return scheduled, batch_size, None, trap_caches + [eligible, scheduled]
-
-    if salt_buckets > 1:
-        salted = over.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-        ranked1 = salted.withColumn("_rn1", F.row_number().over(w1)).cache()
-        drop1 = ranked1.filter(F.col("_rn1") > budget).select(*cols)
-        stage2_in = ranked1.filter(F.col("_rn1") <= budget).drop("_rn1", "_salt")
-    else:
-        ranked1 = None
-        drop1 = None
-        stage2_in = over
-    w2 = Window.partitionBy("host").orderBy(*order)
-    ranked2 = stage2_in.withColumn("_rn2", F.row_number().over(w2)).cache()
-    drop2 = ranked2.filter(F.col("_rn2") > budget).select(*cols)
-    eligible_over = ranked2.filter(F.col("_rn2") <= budget).select(*cols)
-    eligible = under.unionByName(eligible_over).cache()
-    rejected = drop2 if drop1 is None else drop1.unionByName(drop2)
-    if trap_dropped is not None:
-        # trap-capped rows are part of the complement: on compact rounds the
-        # frontier base is rewritten from (complement ∪ adds), and losing
-        # them would silently delete un-fetched URLs
-        rejected = trap_dropped.unionByName(rejected)
-
-    caches = trap_caches + [
-        c for c in (ranked1, ranked2, eligible) if c is not None
-    ]
+    eligible, rejected, caches = _eligible_set(
+        df, budget, salt_buckets, order, want_rejected, trap_threshold, trap_cap
+    )
+    eligible = eligible.cache()
+    caches.append(eligible)
     n_eligible = eligible.count()
     if n_eligible <= batch_size:
         return eligible, n_eligible, rejected, caches
     scheduled = eligible.orderBy(*order).limit(batch_size).cache()
     scheduled.count()
     caches.append(scheduled)
-    rejected = rejected.unionByName(
-        eligible.join(scheduled.select("url"), "url", "left_anti")
-    )
+    if rejected is not None:
+        rejected = rejected.unionByName(
+            eligible.join(scheduled.select("url"), "url", "left_anti")
+        )
     return scheduled, batch_size, rejected, caches
-
-
-def per_host_topk_by(
-    df: DataFrame,
-    budget: int,
-    salt_buckets: int,
-    order: list,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """Per-host top-``budget`` with BUDGET CAP ELISION: a host whose row
-    count is ≤ budget keeps all its rows, so only rows of OVER-budget hosts
-    go through the window sort.  On a Zipf frontier the over-budget set is
-    the short head (at the 4M-page scaling shape: ~150 of 8000 hosts holding
-    ~half the rows), so roughly half the shuffle-sort work vanishes while
-    the row set stays exactly per_host window-top-k (for an under-budget
-    host, top-k = identity).  The host-count aggregate is map-side
-    combinable and its output is one row per host; AQE turns the anti/semi
-    probes into broadcasts when that output is small (no explicit hint — at
-    web scale with 10^8 hosts the over-budget head may itself be too large
-    to broadcast, and AQE then keeps a shuffle join, which is the correct
-    plan there).  ``counts`` lets a caller that already aggregated per-host
-    row counts (the trap cap's cell-census rollup) pass them in instead of
-    paying a second corpus-wide census."""
-    if counts is None:
-        counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    over_hosts = counts.filter(F.col("_n") > budget).select("host")
-    under = df.join(over_hosts, "host", "left_anti")
-    over = df.join(over_hosts, "host", "left_semi")
-    return under.unionByName(_window_topk(over, budget, salt_buckets, order))
-
-
-def _window_topk(
-    df: DataFrame, budget: int, salt_buckets: int, order: list
-) -> DataFrame:
-    if salt_buckets > 1:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-        df = (
-            salted.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= budget)
-            .drop("_rn1", "_salt")
-        )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        df.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= budget)
-        .drop("_rn2")
-    )

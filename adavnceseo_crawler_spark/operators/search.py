@@ -226,17 +226,6 @@ def doc_tokens_en(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     return F.transform(raw, en_stem)
 
 
-def inverted_index(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, term, tf) postings — explode(tokens) → hash-agg counts.  At scale
-    this is persisted bucketed by term so scorers join co-partitioned."""
-    toks = df.select(
-        F.col(id_col), F.explode(doc_tokens(df, id_col, text_col)).alias("term")
-    )
-    return toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-
-
 def bm25_token_scores(
     tokenized: DataFrame,
     terms: list[str],

@@ -283,7 +283,6 @@ def run_round(
         score_expr = score_expr + F.lit(cfg.recrawl_weight) * F.coalesce(
             F.col("score"), F.lit(0.0)
         )
-    if cfg.recrawl_every:
         # stash the carried Cho–G-M priority before the scheduling score
         # overwrites the column: a compact round rewrites un-scheduled rows
         # into the new frontier base and must restore THIS value (the
@@ -431,7 +430,7 @@ def run_round(
                    mode="overwrite", meta={"round": round_no})
         # the survivors count above also filled obs_links (new_cand feeds it)
         n_links = int(obs_links.get["n"])
-    elif cfg.dedup_probe:
+    else:
         # seen-side SCAN, never a seen-side shuffle: url_seen grows every
         # round (O(total URLs crawled)), so the classic left-anti shuffles
         # an ever-growing table on every round.  Instead (1) semi-probe the
@@ -452,15 +451,6 @@ def run_round(
             F.broadcast(hits), "url_hash", "left_anti"
         ).cache()
         n_new = survivors.count()
-    else:
-        new_cand = new_cand.observe(obs_links, F.count(F.lit(1)).alias("n"))
-        seen = cat.read("url_seen") or _empty(spark, schemas.URL_SEEN)
-        survivors = new_cand.join(
-            seen.select("url_hash"), "url_hash", "left_anti"
-        ).cache()
-        n_new = survivors.count()
-        # the survivors count above also filled obs_links (new_cand feeds it)
-        n_links = int(obs_links.get["n"])
     tick("dedup")
 
     # ---- metrics (per-partition lineage, north_rule) --------------------------------

@@ -178,10 +178,3 @@ ROUND_METRICS = T.StructType(
         T.StructField("wall_ms", T.LongType(), True),
     ]
 )
-
-WEB_GRAPH = T.StructType(
-    [
-        T.StructField("src_url", T.StringType(), False),
-        T.StructField("dst_url", T.StringType(), False),
-    ]
-)

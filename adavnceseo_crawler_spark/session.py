@@ -20,6 +20,15 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: 40% of physical
+    memory (MemTotal), leaving room for the JVM's off-heap use, the Python
+    workers and the page cache — a fixed size either starves a large host
+    or gets the driver OOM-killed on a small one."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys * 2 // 5 >> 20}m"
+
+
 def get_spark(
     app_name: str = "adavnceseo_crawler_spark",
     master: str | None = None,
@@ -34,7 +43,8 @@ def get_spark(
         # local mode: match core count, not the 200 default
         if master.startswith("local["):
             inner = master[len("local[") : -1]
-            shuffle_partitions = 32 if inner == "*" else max(8, int(inner))
+            cores = os.cpu_count() if inner == "*" else int(inner)
+            shuffle_partitions = max(8, cores)
         else:
             shuffle_partitions = 200
 
@@ -55,7 +65,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

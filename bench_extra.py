@@ -26,7 +26,7 @@ from bench import HEADLINE, _host_probe  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     reps = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
 
     from adavnceseo_crawler_spark.queries import QUERIES

@@ -234,9 +234,12 @@ def test_stateful_host_stats(spark, tmp_path):
 
 def test_schedule_batch_counted_equivalence(spark):
     """schedule_batch_counted returns the identical row set as schedule_batch
-    in BOTH branches (cap binds / cap slack — the serial global sort never
-    runs in the slack branch), and its ``rejected`` complement is exactly
-    df minus scheduled in both."""
+    whether the cut binds or not (the serial global sort never runs in the
+    slack case), with and without the complement, salting and the trap cap.
+    Its ``rejected`` is exactly df minus scheduled in df's column order, and
+    when the cut binds ``caches[-2]`` is the eligible set."""
+    import itertools
+
     from adavnceseo_crawler_spark.operators.politeness import (
         schedule_batch,
         schedule_batch_counted,
@@ -246,24 +249,44 @@ def test_schedule_batch_counted_equivalence(spark):
         (f"https://h{i % 4}.com/p{i}", f"h{i % 4}", float(i % 13), i)
         for i in range(60)
     ]
+    # distinct-template pages the trap cap leaves alone; h4 is under budget
+    rows += [
+        (f"https://h{j % 5}.com/x-{chr(97 + j)}", f"h{j % 5}", float(j % 7), 100 + j)
+        for j in range(23)
+    ]
     df = spark.createDataFrame(rows, "url string, host string, score double, seq long")
-    all_urls = {r["url"] for r in df.collect()}
-    for batch_size in (7, 1000):  # binds / cannot bind
-        want = {
-            r["url"]
-            for r in schedule_batch(df, budget=9, batch_size=batch_size,
-                                    salt_buckets=2).collect()
-        }
-        got_df, n, rejected, caches = schedule_batch_counted(
-            df, budget=9, batch_size=batch_size, salt_buckets=2
+    all_urls = {r[0] for r in rows}
+
+    def urls(d):
+        return {r["url"] for r in d.collect()}
+
+    for salt, trap in itertools.product((1, 2), (None, 10)):
+        kw = dict(budget=7, salt_buckets=salt, trap_threshold=trap, trap_cap=3)
+        eligible = urls(schedule_batch(df, batch_size=len(rows), **kw))
+        # the trap cap bites: each host's 15-row /pN cell admits 3 rows
+        assert trap is None or all(
+            sum(f"h{h}.com/p" in u for u in eligible) == 3 for h in range(4)
         )
-        got = {r["url"] for r in got_df.collect()}
-        assert got == want and n == len(want)
-        rej = {r["url"] for r in rejected.collect()}
-        assert rej == all_urls - got  # exact complement, no overlap, no loss
-        assert rejected.columns == df.columns
-        for c in caches:
-            c.unpersist()
+        for batch_size in (7, 1000):  # binds / cannot bind
+            want = urls(schedule_batch(df, batch_size=batch_size, **kw))
+            for want_rejected in (True, False):
+                case = (salt, trap, batch_size, want_rejected)
+                got_df, n, rejected, caches = schedule_batch_counted(
+                    df, batch_size=batch_size, want_rejected=want_rejected, **kw
+                )
+                got = urls(got_df)
+                assert got == want and n == len(want), case
+                if batch_size < len(eligible):
+                    assert urls(caches[-2]) == eligible, case
+                if want_rejected:
+                    # exact complement: no overlap, no loss, no duplicates
+                    rej = [r["url"] for r in rejected.collect()]
+                    assert sorted(rej) == sorted(all_urls - got), case
+                    assert rejected.columns == df.columns, case
+                else:
+                    assert rejected is None, case
+                for c in caches:
+                    c.unpersist()
 
 
 def test_en_stem_column_matches_python_mirror(spark):
@@ -718,3 +741,15 @@ def test_extract_features_corrupt_payload_falls_back(spark):
         for r in extract_features(media, decode="real").collect()
     }
     assert out == {0: True, 1: False, 2: False}, out
+
+
+def test_driver_heap_below_physical_memory(spark):
+    """The driver heap (SPARK_GRAFT_DRIVER_MEM, else the default derived from
+    physical memory) must fit the host: a heap sized for a bigger machine
+    gets the driver JVM OOM-killed mid-suite."""
+    from adavnceseo_crawler_spark.session import default_driver_mem
+
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(default_driver_mem()[:-1]) << 20 < phys
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert 0 < heap < phys

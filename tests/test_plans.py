@@ -267,7 +267,7 @@ def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_pat
 
 
 def test_dedup_probe_never_shuffles_seen(spark, tmp_path):
-    """The exact-dedup probe path (round.py, cfg.dedup_probe): url_seen must
+    """The exact-dedup probe path (round.py, use_bloom=False): url_seen must
     be SCANNED and probed via broadcast, never shuffled — its per-round cost
     would otherwise grow O(total URLs crawled).  Pins both halves: the semi
     probe against the seen scan and the anti-join back are BroadcastHashJoins,
